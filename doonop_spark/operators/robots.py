@@ -5,9 +5,11 @@ Reference semantics reproduced exactly:
 
 - robots.txt is fetched **once per (domain, robot)** and the compiled
   verifier cached (``src/robots.rs:23-33``). Spark shape: the corpus ships
-  a small ``robots`` table ``(host, robots_txt)`` that is broadcast-joined
-  onto the wave; rule compilation is cached per (robots_txt, robot) inside
-  the Arrow UDF (compile-once ≈ the reference's verifier cache).
+  a small ``robots`` table ``(host, robots_txt)``; :func:`compile_robots`
+  parses it in ONE Python pass per crawl into ``(host, present, rules,
+  crawl_delay)``, each path rule a Java regex (the compiled table ≈ the
+  reference's verifier cache). The gate is a broadcast join of that table
+  plus one JVM predicate — no wave row ever crosses into Python.
 - a URL **without a domain is always allowed** (F7, ``src/robots.rs:16-19``).
 - a robots **fetch error ⇒ the URL is silently skipped** — never
   dispatched, never counted (``src/workload.rs:100-109`` ``if let Ok(true)``
@@ -33,12 +35,12 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 __all__ = [
     "parse_robots",
     "is_allowed",
     "crawl_delay_of",
+    "compile_robots",
     "robots_gate",
     "DEFAULT_ROBOT",
 ]
@@ -57,6 +59,22 @@ def _rule_regex(pattern: str) -> re.Pattern:
     if anchored_end:
         rx += "$"
     return re.compile(rx)
+
+
+def _java_rule_regex(pattern: str) -> str:
+    """Java regex with the meaning of :func:`_rule_regex`, for the JVM
+    gate: the ``*``-split parts quoted with ``\\Q…\\E`` (a literal ``\\E``
+    escaped, as ``Pattern.quote`` does), joined by ``.*``, ``$`` kept when
+    anchored. ``(?d)`` (UNIX_LINES) makes ``.`` and ``$`` treat line ends
+    the way Python's ``re`` does."""
+    anchored_end = pattern.endswith("$")
+    if anchored_end:
+        pattern = pattern[:-1]
+    parts = [
+        "\\Q" + p.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+        for p in pattern.split("*")
+    ]
+    return "(?d)^" + ".*".join(parts) + ("$" if anchored_end else "")
 
 
 def _parse_groups(robots_txt: str) -> list[tuple[list[str], list[tuple[bool, str]], float | None]]:
@@ -135,8 +153,8 @@ class RobotsRules:
             elif "*" in agents:
                 star.append((rules, delay))
         chosen = exact or star
-        self.rules: list[tuple[bool, int, re.Pattern]] = [
-            (allow, len(p), _rule_regex(p))
+        self.rules: list[tuple[bool, str, re.Pattern]] = [
+            (allow, p, _rule_regex(p))
             for rules, _ in chosen
             for allow, p in rules
         ]
@@ -148,9 +166,9 @@ class RobotsRules:
         if not path:
             path = "/"
         verdict, best_len = True, -1
-        for allow, plen, rx in self.rules:
-            if rx.match(path) and (plen > best_len or (plen == best_len and allow)):
-                verdict, best_len = allow, plen
+        for allow, p, rx in self.rules:
+            if rx.match(path) and (len(p) > best_len or (len(p) == best_len and allow)):
+                verdict, best_len = allow, len(p)
         return verdict
 
 
@@ -182,31 +200,50 @@ def _path_expr(url):
     )
 
 
-def _n_rules_udf(robot: str):
-    @F.pandas_udf(T.IntegerType())
-    def _n_rules(robots_txt: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                len(parse_robots(t, robot).rules) if t is not None else 0
-                for t in robots_txt
-            ],
-            dtype="int32",
-        )
-
-    return _n_rules
+_COMPILED_SCHEMA = (
+    "host string, present boolean, "
+    "rules array<struct<len:int,allow:boolean,rx:string>>, crawl_delay double"
+)
 
 
-def robots_have_path_rules(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> bool:
-    """True iff ANY host's robots.txt carries a path rule for ``robot`` —
-    ONE scalar aggregate over the (distributed) robots table, computed
-    once per crawl so :func:`robots_gate` can drop the per-row Python
-    verdict from every wave's plan when the whole table is rule-free
-    (the common pure-Crawl-delay politeness setup). Never materializes
-    per-host data on the driver."""
-    row = robots.select(
-        F.max(_n_rules_udf(robot)(F.col("robots_txt"))).alias("m")
-    ).first()
-    return bool(row["m"] or 0)
+def compile_robots(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> DataFrame:
+    """``(host, robots_txt)`` → ``(host, present, rules, crawl_delay)`` in ONE
+    Python pass (UA-group choice and rule parsing are :func:`parse_robots`).
+
+    ``present`` is ``robots_txt IS NOT NULL`` (false = fetch miss);
+    ``rules`` holds the winning group's path rules for ``robot`` as
+    ``(len, allow, rx)`` — ``len`` the pattern's length, ``rx`` its Java
+    regex. Callers pin the result once per crawl (``run_crawl``
+    local-checkpoints it) so no later plan re-runs the parse."""
+
+    def compile_batches(batches):
+        for pdf in batches:
+            parsed = [
+                None if t is None else parse_robots(t, robot)
+                for t in pdf["robots_txt"]
+            ]
+            yield pd.DataFrame(
+                {
+                    "host": pdf["host"],
+                    "present": [c is not None for c in parsed],
+                    "rules": [
+                        []
+                        if c is None
+                        else [
+                            {"len": len(p), "allow": allow, "rx": _java_rule_regex(p)}
+                            for allow, p, _ in c.rules
+                        ]
+                        for c in parsed
+                    ],
+                    "crawl_delay": [
+                        None if c is None else c.crawl_delay for c in parsed
+                    ],
+                }
+            )
+
+    return robots.select("host", "robots_txt").mapInPandas(
+        compile_batches, schema=_COMPILED_SCHEMA
+    )
 
 
 def robots_gate(
@@ -216,72 +253,40 @@ def robots_gate(
     use_robots: bool = False,
     host_col: str = "host",
     url_col: str = "url",
-    has_path_rules: bool | None = None,
 ) -> DataFrame:
     """F6/F7 — admission gate over a scheduled wave.
 
-    ``robots`` is a tiny per-host table ``(host, robots_txt)`` →
-    broadcast hash join (no shuffle of the wave). Disallowed and
-    fetch-missed rows are dropped *silently* (reference semantics);
-    hostless URLs always pass (F7).
+    ``robots`` is the tiny per-host table from :func:`compile_robots` (a
+    raw ``(host, robots_txt)`` table is compiled here for ``robot``) →
+    broadcast hash join, no shuffle of the wave, then one JVM predicate:
 
-    ``has_path_rules``: pass False (from :func:`robots_have_path_rules`,
-    computed once per crawl) when NO host carries a path rule for this
-    robot — the gate then stays entirely in whole-stage codegen (host
-    known + robots row present ⇒ allowed); None/True keeps the per-row
-    verdict, with rule-free hosts' rows crossing the Arrow boundary as
-    NULLs only.
+    - hostless URL → pass (F7);
+    - no robots row, or a NULL ``robots_txt`` (fetch miss) → dropped
+      silently (reference semantics);
+    - else the longest rule whose regex matches the URL path decides,
+      Allow winning ties, no match ⇒ allowed — ``array_max`` over the
+      matching ``(len, allow, rx)`` structs orders by ``len`` then
+      ``allow`` (false < true), exactly :meth:`RobotsRules.is_allowed`.
     """
     if not use_robots or robots is None:
         return wave
 
-    if has_path_rules is False:
-        # rule-free table: admission = "a robots row exists" (fetch-miss
-        # rows drop, hostless rows pass) — pure JVM, no Arrow stage.
-        r = F.broadcast(
-            robots.select(F.col("host").alias("__rhost"), "robots_txt")
-        )
-        joined = wave.join(r, wave[host_col] == r["__rhost"], "left")
-        gate = F.col(host_col).isNull() | F.col("robots_txt").isNotNull()
-        return joined.filter(gate).drop("__rhost", "robots_txt")
-
-    # Pre-classify each host ONCE on the tiny broadcast side: the number
-    # of path rules the winning UA group carries for THIS robot. A host
-    # with zero rules (empty robots.txt, or only Crawl-delay) admits every
-    # path, so its wave rows never need the per-row Python verdict — the
-    # gate stays whole-stage-codegen for them (guide §4.1: built-ins over
-    # UDFs). Rows that DO need path matching reach the pandas UDF with
-    # real inputs; everything else crosses the Arrow boundary as NULLs
-    # (a When AROUND a pandas UDF still evaluates it over the whole
-    # batch, so the skip must happen in the UDF's INPUT — same gating
-    # shape as functions/text.normalize_text_expr).
-    _n_rules = _n_rules_udf(robot)
+    if "rules" not in robots.columns:
+        robots = compile_robots(robots, robot)
     r = F.broadcast(
         robots.select(
             F.col("host").alias("__rhost"),
-            "robots_txt",
-            _n_rules(F.col("robots_txt")).alias("__nrules"),
+            F.col("present").alias("__rpresent"),
+            F.col("rules").alias("__rrules"),
         )
     )
     joined = wave.join(r, wave[host_col] == r["__rhost"], "left")
-
-    @F.pandas_udf(T.BooleanType())
-    def _allowed(robots_txt: pd.Series, path: pd.Series) -> pd.Series:
-        return pd.Series(
-            [is_allowed(t, p, robot) for t, p in zip(robots_txt, path)],
-            dtype="boolean",
-        )
-
-    needs_py = F.col("robots_txt").isNotNull() & (F.col("__nrules") > 0)
-    gate = (
-        F.when(F.col(host_col).isNull(), F.lit(True))
-        .when(F.col("robots_txt").isNull(), F.lit(False))  # fetch-miss: skip
-        .when(F.col("__nrules") == 0, F.lit(True))  # no rules: all allowed
-        .otherwise(
-            _allowed(
-                F.when(needs_py, F.col("robots_txt")),
-                F.when(needs_py, _path_expr(F.col(url_col))),
-            )
-        )
+    path = _path_expr(F.col(url_col))
+    longest = F.array_max(
+        F.filter("__rrules", lambda rule: F.regexp_like(path, rule["rx"]))
     )
-    return joined.filter(gate).drop("__rhost", "robots_txt", "__nrules")
+    gate = F.col(host_col).isNull() | (
+        F.coalesce(F.col("__rpresent"), F.lit(False))
+        & F.coalesce(longest["allow"], F.lit(True))
+    )
+    return joined.filter(gate).drop("__rhost", "__rpresent", "__rrules")

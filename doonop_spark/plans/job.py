@@ -262,6 +262,32 @@ class CrawlJob:
 
     def __post_init__(self) -> None:
         self.filters = squash_filters(list(self.filters))
+        # a bad knob fails here, not as a silent fallback mid-crawl
+        for name, allowed in _CHOICES.items():
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"{name}={getattr(self, name)!r}: expected one of {allowed}"
+                )
+        for name, (ok, rule) in _RANGES.items():
+            if not ok(getattr(self, name)):
+                raise ValueError(f"{name}={getattr(self, name)!r}: must be {rule}")
+
+
+# enum knobs and their accepted values
+_CHOICES = {
+    "retry_clock": ("wave", "wall"),
+    "politeness_impl": ("window", "window2", "pandas", "auto"),
+    "bloom_probe_mode": ("auto", "broadcast", "copartition"),
+    "url_key": ("parity", "surt"),
+    "check": ("text", "url", "side", "title", "html"),
+}
+# range knobs: (predicate, rule shown in the error)
+_RANGES = {
+    "per_host_budget": (lambda v: v is None or v >= 1, ">= 1 or None"),
+    "bloom_fold_every": (lambda v: v >= 1, ">= 1"),
+    "seen_compact_every": (lambda v: v >= 0, ">= 0"),
+    "wave_seconds": (lambda v: v > 0, "> 0"),
+}
 
 
 def job_from_argv(argv: list[str]) -> CrawlJob:

@@ -19,7 +19,10 @@ cycle of the reference:
    (F5 before the dedup shuffle), canonical seen-key, within-batch dedup
    (D3), anti-join the seen table (D1, optional bloom pre-filter), robots
    gate (F6/F7: disallowed links are dropped silently but still enter the
-   seen set, exactly like the reference's pop-then-skip).
+   seen set, exactly like the reference's pop-then-skip). The gate — here
+   and on the scheduled wave — is a broadcast join of the robots table
+   compiled once per crawl (operators/robots.py ``compile_robots``) and a
+   JVM predicate; no wave runs Python for robots.
 5. **commit** — results/metrics appended, frontier/seen snapshotted via
    TableIO, scalar state saved ⇒ exact resume at wave granularity.
 
@@ -60,7 +63,7 @@ from doonop_spark.operators.bloom import (
 )
 from doonop_spark.operators.dedup import SEEN_COLS, anti_join_seen, dedup_within_batch
 from doonop_spark.operators.filters import apply_link_filters
-from doonop_spark.operators.robots import robots_gate, robots_have_path_rules
+from doonop_spark.operators.robots import compile_robots, robots_gate
 from doonop_spark.operators.schedule import (
     budget_keep_flags,
     policy_order,
@@ -320,56 +323,15 @@ def run_crawl(
             }
         )
 
-    budgets = (
-        politeness_budget(robots, job.wave_seconds, job.robot)
-        if (robots is not None and job.use_robots)
-        else None
-    )
-    if budgets is not None:
-        # tiny static table re-broadcast every wave: checkpoint once so
-        # the Crawl-delay parse UDF doesn't re-run per wave
-        budgets = budgets.localCheckpoint(eager=True)
-    # one scalar aggregate per crawl: a rule-free robots table (pure
-    # Crawl-delay politeness) lets every wave's TWO robots gates stay
-    # whole-stage codegen instead of running an Arrow stage each
-    robots_rules = (
-        robots_have_path_rules(robots, job.robot)
-        if (robots is not None and job.use_robots)
-        else None
-    )
+    # robots compiled ONCE per crawl (the reference's per-(domain, robot)
+    # verifier cache): the single Python pass over the table runs here and
+    # is pinned, so every wave's two gates and the politeness budgets are
+    # JVM plans over it
+    robots_c = budgets = None
+    if robots is not None and job.use_robots:
+        robots_c = compile_robots(robots, job.robot).localCheckpoint(eager=True)
+        budgets = politeness_budget(robots_c, job.wave_seconds)
     parity_seq = job.engines is not None and job.engines <= 64
-
-    # ---- corpus cache (guide §5: reuse × recompute-cost) -------------------
-    # The fetch join re-reads the corpus EVERY wave — the single biggest
-    # per-wave cost at bench scale (measured: ~40% of the plain crawl).
-    # When the optimizer's size estimate fits job.corpus_cache_max_bytes,
-    # persist the fetch projection ONCE, hash-partitioned AND sorted by the
-    # join key: every wave's SortMergeJoin then reads the cached partitions
-    # with no corpus-side Exchange or Sort (plan-verified), shuffling only
-    # the wave. MEMORY_AND_DISK spills gracefully; unpersisted on exit. At
-    # 100 TB the estimate exceeds any sane budget and the scan-per-wave
-    # plans (bucketed pruning, broadcast waves) remain the scale paths.
-    cached_corpus = None
-    if job.corpus_cache_max_bytes > 0:
-        try:
-            est = int(
-                corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = None
-        if est is not None and est <= job.corpus_cache_max_bytes:
-            from pyspark import StorageLevel
-
-            fetch_cols = ["url", "html"] + (
-                ["warc_ts"] if job.dedup_captures else []
-            )
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            cached_corpus = (
-                corpus.select(*fetch_cols)
-                .repartition(n_shuffle, "url")
-                .sortWithinPartitions("url")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
 
     # partitioned bloom seen-sidecar (north_rule): built once over the
     # current seen set (covers resume too), then FOLDED every
@@ -424,617 +386,646 @@ def run_crawl(
         else None
     )
 
+    # ---- corpus cache (guide §5: reuse × recompute-cost) -------------------
+    # The fetch join re-reads the corpus EVERY wave — the single biggest
+    # per-wave cost at bench scale (measured: ~40% of the plain crawl).
+    # When the optimizer's size estimate fits job.corpus_cache_max_bytes,
+    # persist the fetch projection ONCE, hash-partitioned AND sorted by the
+    # join key: every wave's SortMergeJoin then reads the cached partitions
+    # with no corpus-side Exchange or Sort (plan-verified), shuffling only
+    # the wave. MEMORY_AND_DISK spills gracefully; unpersisted on exit. At
+    # 100 TB the estimate exceeds any sane budget and the scan-per-wave
+    # plans (bucketed pruning, broadcast waves) remain the scale paths.
+    cached_corpus = None
+    if job.corpus_cache_max_bytes > 0:
+        try:
+            est = int(
+                corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            )
+        except Exception:
+            est = None
+        if est is not None and est <= job.corpus_cache_max_bytes:
+            from pyspark import StorageLevel
+
+            fetch_cols = ["url", "html"] + (
+                ["warc_ts"] if job.dedup_captures else []
+            )
+            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            cached_corpus = (
+                corpus.select(*fetch_cols)
+                .repartition(n_shuffle, "url")
+                .sortWithinPartitions("url")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+
     # ---- the loop (reference src/workload.rs:79-200) -----------------------
     waves_run = 0
-    while iteration < job.max_iterations:
-        if cancel is not None and cancel.is_set():
-            break  # graceful shutdown: previous wave fully committed
-        # O5: the limit gates *scheduling*, not landing — the first wave
-        # always dispatches (the reference dispatches seeds before any
-        # inc_limit), and overshoot is ≤ one wave, the analog of the
-        # reference's ≤ in-flight-count overshoot (src/workload.rs:127-131)
-        if job.limit is not None and waves_run > 0 and collected >= job.limit:
-            break
+    try:
+        while iteration < job.max_iterations:
+            if cancel is not None and cancel.is_set():
+                break  # graceful shutdown: previous wave fully committed
+            # O5: the limit gates *scheduling*, not landing — the first wave
+            # always dispatches (the reference dispatches seeds before any
+            # inc_limit), and overshoot is ≤ one wave, the analog of the
+            # reference's ≤ in-flight-count overshoot (src/workload.rs:127-131)
+            if job.limit is not None and waves_run > 0 and collected >= job.limit:
+                break
 
-        # O3 ripeness clock: logical wave index (deterministic) or real
-        # wall-clock seconds (reference parity, src/retry.rs:38-46)
-        wave_now = (
-            float(iteration) if job.retry_clock == "wave" else float(clock())
-        )
-        fresh_empty = fresh_count == 0
-        # retries exist in the frontier iff some rows are is_retry — known
-        # for free from the frontier observation (fresh vs total); unknown
-        # (None, e.g. a pre-auto resume state) falls back conservatively.
-        has_retries = (
-            frontier_rows is None or fresh_count != frontier_rows
-        )
-        # the scalar default budget provably cannot bind when the WHOLE
-        # frontier holds no more rows than the budget (row_number per host
-        # ≤ total rows ≤ budget) — the common case for the engine-bound-
-        # lifted crawl, where it previously cost a full per-host window
-        # shuffle+sort every wave for nothing (guide §2.4).
-        default_bind = job.per_host_budget is not None and (
-            frontier_rows is None or frontier_rows > job.per_host_budget
-        )
-        deferred: list[DataFrame] = []  # not-dispatched rows, as filters
-        use_anti_remaining = False
-        obs_wave = None
-        bkts = None
-
-        if job.engines is not None:
-            # parity / bounded-wave mode: the reference's exact machinery,
-            # complement via anti-join (a top-k has no filter complement).
-            wave = select_wave(
-                frontier,
-                job.retry_policy,
-                job.engines,
-                now=wave_now,
-                fresh_empty=fresh_empty,
-                per_host_budget=budgets,
-                default_budget=job.per_host_budget,
-                impl=resolve_politeness_impl(
-                    job.politeness_impl, frontier_rows,
-                    job.politeness_auto_threshold,
-                ),
+            # O3 ripeness clock: logical wave index (deterministic) or real
+            # wall-clock seconds (reference parity, src/retry.rs:38-46)
+            wave_now = (
+                float(iteration) if job.retry_clock == "wave" else float(clock())
             )
-            use_anti_remaining = True
-            # dispatch_rank fixes the deterministic "completion order"
-            # within the wave. Parity mode ranks by the exact policy order;
-            # scale mode avoids the single-partition sort — ordering within
-            # a wave is not observable there anyway.
-            if parity_seq:
-                wave = wave.withColumn(
-                    "dispatch_rank",
-                    F.row_number().over(
-                        Window.orderBy(*policy_order(job.retry_policy))
-                    ),
-                )
-            else:
-                wave = wave.withColumn(
-                    "dispatch_rank", F.monotonically_increasing_id()
-                )
-            obs_wave = Observation(f"wave_{iteration}")
-            wave_metrics = [F.count(F.lit(1)).alias("n")]
-            if bucketed_fetch:
-                wave_metrics.append(
-                    F.collect_set(
-                        bucket_expr(F.col("url"), corpus_buckets)
-                    ).alias("buckets")
-                )
-            wave = wave.observe(obs_wave, *wave_metrics)
-            wave = io.materialize(wave, "wave", iteration)
-            n_sched = int(obs_wave.get["n"])
-            if bucketed_fetch:
-                bkts = list(obs_wave.get["buckets"])
-        else:
-            # scale mode: ripeness and policy are FILTERS over the frontier,
-            # so the rows staying behind are filters too — the per-wave
-            # frontier ∖ wave anti-join is gone (guide §2.4: remove the
-            # shuffle outright). Bucket sets ride the frontier observation
-            # (superset of the wave's buckets: pruning stays sound).
-            ripe = (
-                ~F.col("is_retry")
-                | (F.col("retry_at") <= F.lit(wave_now))
-                | F.lit(fresh_empty)
+            fresh_empty = fresh_count == 0
+            # retries exist in the frontier iff some rows are is_retry — known
+            # for free from the frontier observation (fresh vs total); unknown
+            # (None, e.g. a pre-auto resume state) falls back conservatively.
+            has_retries = (
+                frontier_rows is None or fresh_count != frontier_rows
             )
-            cand = frontier.filter(ripe)
-            if job.retry_policy == RetryPolicy.NO:
-                cand = cand.filter(~F.col("is_retry"))
-                compl = F.col("is_retry")
-            else:
-                compl = (
-                    F.col("is_retry")
-                    & (F.col("retry_at") > F.lit(wave_now))
-                    & ~F.lit(fresh_empty)
-                )
-            if has_retries:
-                deferred.append(frontier.filter(compl))
+            # the scalar default budget provably cannot bind when the WHOLE
+            # frontier holds no more rows than the budget (row_number per host
+            # ≤ total rows ≤ budget) — the common case for the engine-bound-
+            # lifted crawl, where it previously cost a full per-host window
+            # shuffle+sort every wave for nothing (guide §2.4).
+            default_bind = job.per_host_budget is not None and (
+                frontier_rows is None or frontier_rows > job.per_host_budget
+            )
+            deferred: list[DataFrame] = []  # not-dispatched rows, as filters
+            use_anti_remaining = False
+            obs_wave = None
+            bkts = None
 
-            if budgets is not None or default_bind:
-                # politeness / binding budget: ONE materialized window
-                # frame yields both the wave (__keep) and its deferred
-                # complement; only rows of hosts carrying a budget row are
-                # windowed (budget_keep_flags).
-                flagged = budget_keep_flags(
-                    cand,
-                    policy_order(job.retry_policy),
-                    budgets,
-                    job.per_host_budget,
+            if job.engines is not None:
+                # parity / bounded-wave mode: the reference's exact machinery,
+                # complement via anti-join (a top-k has no filter complement).
+                wave = select_wave(
+                    frontier,
+                    job.retry_policy,
+                    job.engines,
+                    now=wave_now,
+                    fresh_empty=fresh_empty,
+                    per_host_budget=budgets,
+                    default_budget=job.per_host_budget,
                     impl=resolve_politeness_impl(
                         job.politeness_impl, frontier_rows,
                         job.politeness_auto_threshold,
                     ),
-                    default_can_bind=default_bind,
                 )
-                obs_wave = Observation(f"wave_{iteration}")
-                flagged = flagged.observe(
-                    obs_wave, F.count_if(F.col("__keep")).alias("n")
-                )
-                flagged = io.materialize(flagged, "wave", iteration)
-                n_sched = int(obs_wave.get["n"])
-                wave = flagged.filter(F.col("__keep")).drop("__keep")
-                deferred.append(
-                    flagged.filter(~F.col("__keep")).drop("__keep")
-                )
-            elif has_retries:
-                # retries pending: the wave is a real subset — materialize
-                # to pin it and observe its size (old slow path, minus the
-                # anti-join: the complement is the filter above).
-                obs_wave = Observation(f"wave_{iteration}")
-                cand = cand.observe(obs_wave, F.count(F.lit(1)).alias("n"))
-                wave = io.materialize(cand, "wave", iteration)
-                n_sched = int(obs_wave.get["n"])
-            else:
-                # FAST PATH (no budgets can bind, no retries, no wave cap):
-                # every frontier row dispatches — the wave IS the already-
-                # checkpointed frontier; zero extra jobs, and the wave size
-                # is the frontier count observed last wave.
-                wave = cand
-                n_sched = frontier_rows
-            # scale-mode dispatch_rank: monotonically_increasing_id over a
-            # checkpointed frame (directly, or one projection above it) is
-            # deterministic — the fetch materialize pins the values.
-            wave = wave.withColumn(
-                "dispatch_rank", F.monotonically_increasing_id()
-            )
-            if bucketed_fetch:
-                if frontier_buckets is not None:
-                    bkts = frontier_buckets
+                use_anti_remaining = True
+                # dispatch_rank fixes the deterministic "completion order"
+                # within the wave. Parity mode ranks by the exact policy order;
+                # scale mode avoids the single-partition sort — ordering within
+                # a wave is not observable there anyway.
+                if parity_seq:
+                    wave = wave.withColumn(
+                        "dispatch_rank",
+                        F.row_number().over(
+                            Window.orderBy(*policy_order(job.retry_policy))
+                        ),
+                    )
                 else:
-                    # resume before any observation: one bounded agg
-                    # (≤ B ints), once
-                    bkts = list(
-                        wave.agg(_bucket_metric()).first()["buckets"]
+                    wave = wave.withColumn(
+                        "dispatch_rank", F.monotonically_increasing_id()
                     )
-
-        if n_sched == 0:
-            break  # nothing dispatchable: job_counter == 0 (src/workload.rs:178)
-        waves_run += 1
-
-        gated = robots_gate(
-            wave, robots, job.robot, job.use_robots,
-            has_path_rules=robots_rules,
-        )
-        # X1 salting is opt-in (salt_target_rows=0 default): every fetch
-        # path below already balances the extract stage via its own
-        # url-keyed shuffle / corpus-partition streaming, so salting here
-        # is measured pure overhead (bench --skew: 26% slower on an
-        # 80%-hot corpus); the knob remains for custom data_expr
-        # pipelines that host-group downstream of the fetch
-        if job.salt_target_rows and n_sched > job.salt_target_rows:
-            gated = salt_for_skew(gated, job.salt_target_rows)
-
-        # ---- fetch (corpus join) + fault injection + extraction ----------
-        def shape(joined: DataFrame) -> DataFrame:
-            """fault injection + status + fused extraction over a wave⋈corpus
-            frame (E1-E4 + P1/P2/P4)."""
-            attempt = F.col("retry_count") + 1
-            if fault_schedule is not None:
-                fs = fault_schedule.select(
-                    F.col("url").alias("__furl"),
-                    F.col("attempt").alias("__fattempt"),
-                    F.col("fault").alias("__fault"),
-                )
-                joined = joined.join(
-                    F.broadcast(fs),
-                    (joined["url"] == fs["__furl"]) & (attempt == fs["__fattempt"]),
-                    "left",
-                ).drop("__furl", "__fattempt")
+                obs_wave = Observation(f"wave_{iteration}")
+                wave_metrics = [F.count(F.lit(1)).alias("n")]
+                if bucketed_fetch:
+                    wave_metrics.append(
+                        F.collect_set(
+                            bucket_expr(F.col("url"), corpus_buckets)
+                        ).alias("buckets")
+                    )
+                wave = wave.observe(obs_wave, *wave_metrics)
+                wave = io.materialize(wave, "wave", iteration)
+                n_sched = int(obs_wave.get["n"])
+                if bucketed_fetch:
+                    bkts = list(obs_wave.get["buckets"])
             else:
-                joined = joined.withColumn("__fault", F.lit(None).cast("string"))
-            joined = joined.withColumn(
-                "status",
-                F.when(F.col("__fault").isNotNull(), F.col("__fault")).otherwise(
-                    F.when(F.col("html").isNotNull(), F.lit("ok")).otherwise(
-                        F.lit("error")
+                # scale mode: ripeness and policy are FILTERS over the frontier,
+                # so the rows staying behind are filters too — the per-wave
+                # frontier ∖ wave anti-join is gone (guide §2.4: remove the
+                # shuffle outright). Bucket sets ride the frontier observation
+                # (superset of the wave's buckets: pruning stays sound).
+                ripe = (
+                    ~F.col("is_retry")
+                    | (F.col("retry_at") <= F.lit(wave_now))
+                    | F.lit(fresh_empty)
+                )
+                cand = frontier.filter(ripe)
+                if job.retry_policy == RetryPolicy.NO:
+                    cand = cand.filter(~F.col("is_retry"))
+                    compl = F.col("is_retry")
+                else:
+                    compl = (
+                        F.col("is_retry")
+                        & (F.col("retry_at") > F.lit(wave_now))
+                        & ~F.lit(fresh_empty)
                     )
-                ),
-            )
-            # fused P1+P2+P4: one Arrow stage → absolutized links + text
-            joined = joined.withColumn(
-                "__page",
-                F.when(F.col("status") == "ok", extract_page_udf("url", "html")),
-            )
-            extra = []
-            if check_data_fn is not None:
+                if has_retries:
+                    deferred.append(frontier.filter(compl))
+
+                if budgets is not None or default_bind:
+                    # politeness / binding budget: ONE materialized window
+                    # frame yields both the wave (__keep) and its deferred
+                    # complement; only rows of hosts carrying a budget row are
+                    # windowed (budget_keep_flags).
+                    flagged = budget_keep_flags(
+                        cand,
+                        policy_order(job.retry_policy),
+                        budgets,
+                        job.per_host_budget,
+                        impl=resolve_politeness_impl(
+                            job.politeness_impl, frontier_rows,
+                            job.politeness_auto_threshold,
+                        ),
+                        default_can_bind=default_bind,
+                    )
+                    obs_wave = Observation(f"wave_{iteration}")
+                    flagged = flagged.observe(
+                        obs_wave, F.count_if(F.col("__keep")).alias("n")
+                    )
+                    flagged = io.materialize(flagged, "wave", iteration)
+                    n_sched = int(obs_wave.get["n"])
+                    wave = flagged.filter(F.col("__keep")).drop("__keep")
+                    deferred.append(
+                        flagged.filter(~F.col("__keep")).drop("__keep")
+                    )
+                elif has_retries:
+                    # retries pending: the wave is a real subset — materialize
+                    # to pin it and observe its size (old slow path, minus the
+                    # anti-join: the complement is the filter above).
+                    obs_wave = Observation(f"wave_{iteration}")
+                    cand = cand.observe(obs_wave, F.count(F.lit(1)).alias("n"))
+                    wave = io.materialize(cand, "wave", iteration)
+                    n_sched = int(obs_wave.get["n"])
+                else:
+                    # FAST PATH (no budgets can bind, no retries, no wave cap):
+                    # every frontier row dispatches — the wave IS the already-
+                    # checkpointed frontier; zero extra jobs, and the wave size
+                    # is the frontier count observed last wave.
+                    wave = cand
+                    n_sched = frontier_rows
+                # scale-mode dispatch_rank: monotonically_increasing_id over a
+                # checkpointed frame (directly, or one projection above it) is
+                # deterministic — the fetch materialize pins the values.
+                wave = wave.withColumn(
+                    "dispatch_rank", F.monotonically_increasing_id()
+                )
+                if bucketed_fetch:
+                    if frontier_buckets is not None:
+                        bkts = frontier_buckets
+                    else:
+                        # resume before any observation: one bounded agg
+                        # (≤ B ints), once
+                        bkts = list(
+                            wave.agg(_bucket_metric()).first()["buckets"]
+                        )
+
+            if n_sched == 0:
+                break  # nothing dispatchable: job_counter == 0 (src/workload.rs:178)
+            waves_run += 1
+
+            gated = robots_gate(wave, robots_c, use_robots=job.use_robots)
+            # X1 salting is opt-in (salt_target_rows=0 default): every fetch
+            # path below already balances the extract stage via its own
+            # url-keyed shuffle / corpus-partition streaming, so salting here
+            # is measured pure overhead (bench --skew: 26% slower on an
+            # 80%-hot corpus); the knob remains for custom data_expr
+            # pipelines that host-group downstream of the fetch
+            if job.salt_target_rows and n_sched > job.salt_target_rows:
+                gated = salt_for_skew(gated, job.salt_target_rows)
+
+            # ---- fetch (corpus join) + fault injection + extraction ----------
+            def shape(joined: DataFrame) -> DataFrame:
+                """fault injection + status + fused extraction over a wave⋈corpus
+                frame (E1-E4 + P1/P2/P4)."""
+                attempt = F.col("retry_count") + 1
+                if fault_schedule is not None:
+                    fs = fault_schedule.select(
+                        F.col("url").alias("__furl"),
+                        F.col("attempt").alias("__fattempt"),
+                        F.col("fault").alias("__fault"),
+                    )
+                    joined = joined.join(
+                        F.broadcast(fs),
+                        (joined["url"] == fs["__furl"]) & (attempt == fs["__fattempt"]),
+                        "left",
+                    ).drop("__furl", "__fattempt")
+                else:
+                    joined = joined.withColumn("__fault", F.lit(None).cast("string"))
                 joined = joined.withColumn(
-                    "check_data",
-                    F.when(F.col("status") == "ok", check_data_fn()),
-                )
-                extra = ["check_data"]
-            return joined.select(
-                "url",
-                "ukey",
-                "url_hash",
-                "host",
-                "depth",
-                "seq",
-                "is_retry",
-                "retry_count",
-                "retry_at",
-                "dispatch_rank",
-                "status",
-                F.col("__page.links").alias("out_links"),
-                F.col("__page.text").alias("text"),
-                *extra,
-            )
-
-        def latest_capture(joined: DataFrame) -> DataFrame:
-            """Revisit semantics (opt-in, ``job.dedup_captures``): a WARC
-            corpus may legally hold several captures of one URL; the
-            fetch must return ONE page per frontier URL — the latest
-            capture wins, ties broken by html hash for determinism.
-            Wave-sized window only (never a corpus-side shuffle); on the
-            plain path the join's url-keyed exchange is reused by the
-            window's partitionBy(url). Default OFF: the parquet corpus
-            contract has unique urls and the broadcast path would pay a
-            wave-sized shuffle for nothing."""
-            if not job.dedup_captures:
-                return joined
-            w = Window.partitionBy("url").orderBy(
-                F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
-            )
-            return (
-                joined.withColumn("__cap_rn", F.row_number().over(w))
-                .filter(F.col("__cap_rn") == 1)
-                .drop("__cap_rn")
-            )
-
-        # Cached fetch: when the corpus fits the configured cache budget it
-        # was persisted ONCE above, hash-partitioned and sorted by url — the
-        # per-wave join then shuffles/sorts ONLY the wave side (the corpus
-        # side of the SortMergeJoin reads the in-memory partitions with no
-        # Exchange and no Sort; guide §2.4/§5). Results are identical to
-        # every other fetch path (same left join on url; bucket pruning is
-        # a scan optimization the cache makes moot).
-        if cached_corpus is not None:
-            joined = latest_capture(
-                gated.join(cached_corpus, on="url", how="left")
-            )
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
-        # Bucketed fetch (the 100 TB plan): the corpus is storage-partitioned
-        # by bucket = pmod(xxhash64(url), B) (write_bucketed_corpus), the
-        # wave's bucket set is collected (≤ min(wave, B) ints) and pushed as
-        # a partition predicate — the corpus scan reads ONLY the wave's
-        # buckets instead of rescanning the whole corpus every wave.
-        elif bucketed_fetch:
-            # bucket set observed on the wave/frontier materialize
-            # (pre-gate superset of gated's buckets: still-correct
-            # pruning, no extra job)
-            wave_b = gated.withColumn(
-                "bucket", bucket_expr(F.col("url"), corpus_buckets)
-            )
-            pruned = corpus.filter(F.col("bucket").isin(bkts))
-            joined = latest_capture(
-                wave_b.join(pruned, on=["bucket", "url"], how="left").drop("bucket")
-            )
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
-        # Small waves broadcast INTO the corpus join: the corpus (the 100 TB
-        # side) is probed in place instead of being shuffled under a
-        # sort-merge join. Outer joins cannot broadcast their preserved
-        # side, so fetch-misses (URLs absent from the corpus = terminal
-        # fetch errors, E3) are reconstructed with a second broadcast
-        # anti-join against the materialized hits — both joins stream the
-        # big side exactly once.
-        elif n_sched <= job.broadcast_wave_max:
-            hits = latest_capture(corpus.join(F.broadcast(gated), on="url", how="inner"))
-            shaped_h, get_hits = _observe_status(shape(hits), iteration, "hits")
-            fetched = io.materialize(shaped_h, "wave_fetched", iteration)
-            missed = gated.join(
-                F.broadcast(fetched.select("url")), on="url", how="left_anti"
-            ).withColumn("html", F.lit(None).cast("binary"))
-            # materialized too: a lazy miss branch would re-run its Arrow
-            # stage on every downstream action over `fetched`
-            shaped_m, get_miss = _observe_status(shape(missed), iteration, "miss")
-            missed = io.materialize(shaped_m, "wave_missed", iteration)
-            fetched = fetched.unionByName(missed)
-            get_counts = lambda: {
-                k: get_hits()[k] + get_miss()[k] for k in get_hits()
-            }
-        else:
-            joined = latest_capture(gated.join(corpus, on="url", how="left"))
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
-        ok = F.col("status") == "ok"
-
-        # ---- stats: observed on the fetch materialize, no extra job ------
-        c = get_counts()
-        n_wave = c["n"]  # may be 0: whole wave robots-skipped
-        n_ok = c["ok"]
-        n_timeout = c["timeout"]
-        n_error = c["error"]
-
-        stats.count_visited += n_wave
-        stats.count_collected += n_ok
-        if job.retry_policy == RetryPolicy.NO:
-            # timeouts are ordinary terminal errors under policy No
-            stats.count_errors += n_error + n_timeout
-        else:
-            stats.count_errors += n_error
-            stats.count_retries += n_timeout
-        collected += n_ok
-
-        # per-(iteration, partition, host, status) lineage metrics — the
-        # partition_id records WHICH executor partition of the fetched wave
-        # produced each count (north_rule per-partition lineage); derived
-        # from the checkpointed wave; lazy in memory mode (only read at
-        # loop end), written in durable mode
-        io.append(
-            fetched.groupBy(
-                F.spark_partition_id().alias("partition_id"), "host", "status"
-            )
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.lit(iteration).alias("iteration"),
-                "partition_id",
-                "host",
-                "status",
-                "n",
-            ),
-            "metrics",
-            iteration,
-            eager=False,
-        )
-
-        # ---- results (collection order preserved via dispatch_rank) ------
-        results_wave = fetched.filter(ok).select(
-            F.lit(iteration).alias("iteration"),
-            F.col("dispatch_rank").cast("long"),
-            "seq",
-            "url",
-            "depth",
-            (data_expr if data_expr is not None else F.col("text")).alias("data"),
-        )
-        io.append(results_wave, "results", iteration, eager=False)
-
-        # ---- expand: links → frontier candidates (P1,P4,F5,D3,D1,F6) -----
-        links = fetched.filter(ok & (F.size("out_links") > 0)).select(
-            F.col("dispatch_rank").alias("parent_rank"),
-            F.col("depth").alias("parent_depth"),
-            F.posexplode("out_links").alias("pos", "link"),  # already absolute
-        )
-        links = apply_link_filters(links, job.filters, url_col="link")
-        links = links.select(
-            F.col("link").alias("url"),
-            _ukey(F.col("link"), job.url_key).alias("ukey"),
-            "parent_rank",
-            "parent_depth",
-            "pos",
-        ).withColumn("url_hash", url_hash_col(F.col("ukey")))
-        links = dedup_within_batch(links, [F.asc("parent_rank"), F.asc("pos")])
-        if use_bloom:
-            # bloom pre-filter (north_rule sidecar): candidates the bank
-            # clears as definitely-new skip the exact anti-join shuffle
-            # against the covered seen mass; they are only exact-checked
-            # against the small not-yet-folded delta tail. The flag is
-            # computed ONCE over a materialized frame — filtering an
-            # unmaterialized pipeline on probe/~probe would run the whole
-            # explode/absolutize/dedup chain (and the probe UDF) twice.
-            if bloom_probe_mode == "copartition":
-                # 10^10 path: cogroup links with bank rows on pid — the
-                # bank never touches the driver (operators/bloom.py)
-                flagged = io.materialize(
-                    bloom_flag_copartitioned(
-                        links, bloom_df, n_partitions=job.bloom_partitions
+                    "status",
+                    F.when(F.col("__fault").isNotNull(), F.col("__fault")).otherwise(
+                        F.when(F.col("html").isNotNull(), F.lit("ok")).otherwise(
+                            F.lit("error")
+                        )
                     ),
-                    "links_flagged",
-                    iteration,
+                )
+                # fused P1+P2+P4: one Arrow stage → absolutized links + text
+                joined = joined.withColumn(
+                    "__page",
+                    F.when(F.col("status") == "ok", extract_page_udf("url", "html")),
+                )
+                extra = []
+                if check_data_fn is not None:
+                    joined = joined.withColumn(
+                        "check_data",
+                        F.when(F.col("status") == "ok", check_data_fn()),
+                    )
+                    extra = ["check_data"]
+                return joined.select(
+                    "url",
+                    "ukey",
+                    "url_hash",
+                    "host",
+                    "depth",
+                    "seq",
+                    "is_retry",
+                    "retry_count",
+                    "retry_at",
+                    "dispatch_rank",
+                    "status",
+                    F.col("__page.links").alias("out_links"),
+                    F.col("__page.text").alias("text"),
+                    *extra,
+                )
+
+            def latest_capture(joined: DataFrame) -> DataFrame:
+                """Revisit semantics (opt-in, ``job.dedup_captures``): a WARC
+                corpus may legally hold several captures of one URL; the
+                fetch must return ONE page per frontier URL — the latest
+                capture wins, ties broken by html hash for determinism.
+                Wave-sized window only (never a corpus-side shuffle); on the
+                plain path the join's url-keyed exchange is reused by the
+                window's partitionBy(url). Default OFF: the parquet corpus
+                contract has unique urls and the broadcast path would pay a
+                wave-sized shuffle for nothing."""
+                if not job.dedup_captures:
+                    return joined
+                w = Window.partitionBy("url").orderBy(
+                    F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
+                )
+                return (
+                    joined.withColumn("__cap_rn", F.row_number().over(w))
+                    .filter(F.col("__cap_rn") == 1)
+                    .drop("__cap_rn")
+                )
+
+            # Cached fetch: when the corpus fits the configured cache budget it
+            # was persisted ONCE above, hash-partitioned and sorted by url — the
+            # per-wave join then shuffles/sorts ONLY the wave side (the corpus
+            # side of the SortMergeJoin reads the in-memory partitions with no
+            # Exchange and no Sort; guide §2.4/§5). Results are identical to
+            # every other fetch path (same left join on url; bucket pruning is
+            # a scan optimization the cache makes moot).
+            if cached_corpus is not None:
+                joined = latest_capture(
+                    gated.join(cached_corpus, on="url", how="left")
+                )
+                shaped, get_counts = _observe_status(shape(joined), iteration)
+                fetched = io.materialize(shaped, "wave_fetched", iteration)
+            # Bucketed fetch (the 100 TB plan): the corpus is storage-partitioned
+            # by bucket = pmod(xxhash64(url), B) (write_bucketed_corpus), the
+            # wave's bucket set is collected (≤ min(wave, B) ints) and pushed as
+            # a partition predicate — the corpus scan reads ONLY the wave's
+            # buckets instead of rescanning the whole corpus every wave.
+            elif bucketed_fetch:
+                # bucket set observed on the wave/frontier materialize
+                # (pre-gate superset of gated's buckets: still-correct
+                # pruning, no extra job)
+                wave_b = gated.withColumn(
+                    "bucket", bucket_expr(F.col("url"), corpus_buckets)
+                )
+                pruned = corpus.filter(F.col("bucket").isin(bkts))
+                joined = latest_capture(
+                    wave_b.join(pruned, on=["bucket", "url"], how="left").drop("bucket")
+                )
+                shaped, get_counts = _observe_status(shape(joined), iteration)
+                fetched = io.materialize(shaped, "wave_fetched", iteration)
+            # Small waves broadcast INTO the corpus join: the corpus (the 100 TB
+            # side) is probed in place instead of being shuffled under a
+            # sort-merge join. Outer joins cannot broadcast their preserved
+            # side, so fetch-misses (URLs absent from the corpus = terminal
+            # fetch errors, E3) are reconstructed with a second broadcast
+            # anti-join against the materialized hits — both joins stream the
+            # big side exactly once.
+            elif n_sched <= job.broadcast_wave_max:
+                hits = latest_capture(corpus.join(F.broadcast(gated), on="url", how="inner"))
+                shaped_h, get_hits = _observe_status(shape(hits), iteration, "hits")
+                fetched = io.materialize(shaped_h, "wave_fetched", iteration)
+                missed = gated.join(
+                    F.broadcast(fetched.select("url")), on="url", how="left_anti"
+                ).withColumn("html", F.lit(None).cast("binary"))
+                # materialized too: a lazy miss branch would re-run its Arrow
+                # stage on every downstream action over `fetched`
+                shaped_m, get_miss = _observe_status(shape(missed), iteration, "miss")
+                missed = io.materialize(shaped_m, "wave_missed", iteration)
+                fetched = fetched.unionByName(missed)
+                get_counts = lambda: {
+                    k: get_hits()[k] + get_miss()[k] for k in get_hits()
+                }
+            else:
+                joined = latest_capture(gated.join(corpus, on="url", how="left"))
+                shaped, get_counts = _observe_status(shape(joined), iteration)
+                fetched = io.materialize(shaped, "wave_fetched", iteration)
+            ok = F.col("status") == "ok"
+
+            # ---- stats: observed on the fetch materialize, no extra job ------
+            c = get_counts()
+            n_wave = c["n"]  # may be 0: whole wave robots-skipped
+            n_ok = c["ok"]
+            n_timeout = c["timeout"]
+            n_error = c["error"]
+
+            stats.count_visited += n_wave
+            stats.count_collected += n_ok
+            if job.retry_policy == RetryPolicy.NO:
+                # timeouts are ordinary terminal errors under policy No
+                stats.count_errors += n_error + n_timeout
+            else:
+                stats.count_errors += n_error
+                stats.count_retries += n_timeout
+            collected += n_ok
+
+            # per-(iteration, partition, host, status) lineage metrics — the
+            # partition_id records WHICH executor partition of the fetched wave
+            # produced each count (north_rule per-partition lineage); derived
+            # from the checkpointed wave; lazy in memory mode (only read at
+            # loop end), written in durable mode
+            io.append(
+                fetched.groupBy(
+                    F.spark_partition_id().alias("partition_id"), "host", "status"
+                )
+                .agg(F.count("*").alias("n"))
+                .select(
+                    F.lit(iteration).alias("iteration"),
+                    "partition_id",
+                    "host",
+                    "status",
+                    "n",
+                ),
+                "metrics",
+                iteration,
+                eager=False,
+            )
+
+            # ---- results (collection order preserved via dispatch_rank) ------
+            results_wave = fetched.filter(ok).select(
+                F.lit(iteration).alias("iteration"),
+                F.col("dispatch_rank").cast("long"),
+                "seq",
+                "url",
+                "depth",
+                (data_expr if data_expr is not None else F.col("text")).alias("data"),
+            )
+            io.append(results_wave, "results", iteration, eager=False)
+
+            # ---- expand: links → frontier candidates (P1,P4,F5,D3,D1,F6) -----
+            links = fetched.filter(ok & (F.size("out_links") > 0)).select(
+                F.col("dispatch_rank").alias("parent_rank"),
+                F.col("depth").alias("parent_depth"),
+                F.posexplode("out_links").alias("pos", "link"),  # already absolute
+            )
+            links = apply_link_filters(links, job.filters, url_col="link")
+            links = links.select(
+                F.col("link").alias("url"),
+                _ukey(F.col("link"), job.url_key).alias("ukey"),
+                "parent_rank",
+                "parent_depth",
+                "pos",
+            ).withColumn("url_hash", url_hash_col(F.col("ukey")))
+            links = dedup_within_batch(links, [F.asc("parent_rank"), F.asc("pos")])
+            if use_bloom:
+                # bloom pre-filter (north_rule sidecar): candidates the bank
+                # clears as definitely-new skip the exact anti-join shuffle
+                # against the covered seen mass; they are only exact-checked
+                # against the small not-yet-folded delta tail. The flag is
+                # computed ONCE over a materialized frame — filtering an
+                # unmaterialized pipeline on probe/~probe would run the whole
+                # explode/absolutize/dedup chain (and the probe UDF) twice.
+                if bloom_probe_mode == "copartition":
+                    # 10^10 path: cogroup links with bank rows on pid — the
+                    # bank never touches the driver (operators/bloom.py)
+                    flagged = io.materialize(
+                        bloom_flag_copartitioned(
+                            links, bloom_df, n_partitions=job.bloom_partitions
+                        ),
+                        "links_flagged",
+                        iteration,
+                    )
+                else:
+                    flagged = io.materialize(
+                        links.withColumn(
+                            "__maybe", bloom_probe_fn(F.col("url_hash"))
+                        ),
+                        "links_flagged",
+                        iteration,
+                    )
+                checked = flagged.filter(F.col("__maybe")).drop("__maybe")
+                checked = checked.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
+                fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
+                for recent in bloom_pending:  # uncovered tail: ≤ fold_every frames
+                    fresh = fresh.join(
+                        recent.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti"
+                    )
+                new_links = checked.unionByName(fresh)
+            else:
+                new_links = anti_join_seen(links, seen)
+            # materialize once: the seen delta, the robots gate and the frontier
+            # union all branch from here — without this the explode/absolutize/
+            # anti-join pipeline would run three times
+            new_links = io.materialize(new_links, "new_links", iteration)
+
+            if not parity_seq:
+                # scale-mode seq: unique + monotone ids straight from
+                # monotonically_increasing_id over the checkpointed frame
+                # (deterministic partitioning ⇒ stable across jobs). seq needs
+                # monotone+unique, never dense — holes are harmless. The old
+                # dense form paid one groupBy+collect job per wave to compute
+                # per-partition offsets; sparse ids instead advance seq_counter
+                # by ≤ nparts·2^33 ≈ 2^38 per wave, which overflows int64 only
+                # after ~2^24 waves — six orders of magnitude past
+                # max_iterations (guarded below at the seq_counter update).
+                new_links = new_links.withColumn(
+                    "__seq0", (F.monotonically_increasing_id() + 1).cast("long")
+                )
+
+            # all newly-discovered links enter the seen set at enqueue time
+            # (D1, src/workload.rs:202-211) — even those robots later rejects
+            seen_new = new_links.select(*SEEN_COLS)
+            admitted = robots_gate(
+                new_links.withColumn("host", host_expr(F.col("url"))),
+                robots_c,
+                use_robots=job.use_robots,
+            )
+
+            # seq: monotone enqueue counter continuing the reference's append
+            # order (parent completion order, then in-page position)
+            if parity_seq:
+                admitted = admitted.withColumn(
+                    "__rn",
+                    F.row_number().over(Window.orderBy(F.asc("parent_rank"), F.asc("pos"))),
                 )
             else:
-                flagged = io.materialize(
-                    links.withColumn(
-                        "__maybe", bloom_probe_fn(F.col("url_hash"))
-                    ),
-                    "links_flagged",
-                    iteration,
-                )
-            checked = flagged.filter(F.col("__maybe")).drop("__maybe")
-            checked = checked.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
-            fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
-            for recent in bloom_pending:  # uncovered tail: ≤ fold_every frames
-                fresh = fresh.join(
-                    recent.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti"
-                )
-            new_links = checked.unionByName(fresh)
-        else:
-            new_links = anti_join_seen(links, seen)
-        # materialize once: the seen delta, the robots gate and the frontier
-        # union all branch from here — without this the explode/absolutize/
-        # anti-join pipeline would run three times
-        new_links = io.materialize(new_links, "new_links", iteration)
-
-        if not parity_seq:
-            # scale-mode seq: unique + monotone ids straight from
-            # monotonically_increasing_id over the checkpointed frame
-            # (deterministic partitioning ⇒ stable across jobs). seq needs
-            # monotone+unique, never dense — holes are harmless. The old
-            # dense form paid one groupBy+collect job per wave to compute
-            # per-partition offsets; sparse ids instead advance seq_counter
-            # by ≤ nparts·2^33 ≈ 2^38 per wave, which overflows int64 only
-            # after ~2^24 waves — six orders of magnitude past
-            # max_iterations (guarded below at the seq_counter update).
-            new_links = new_links.withColumn(
-                "__seq0", (F.monotonically_increasing_id() + 1).cast("long")
-            )
-
-        # all newly-discovered links enter the seen set at enqueue time
-        # (D1, src/workload.rs:202-211) — even those robots later rejects
-        seen_new = new_links.select(*SEEN_COLS)
-        admitted = robots_gate(
-            new_links.withColumn("host", host_expr(F.col("url"))),
-            robots,
-            job.robot,
-            job.use_robots,
-            has_path_rules=robots_rules,
-        )
-
-        # seq: monotone enqueue counter continuing the reference's append
-        # order (parent completion order, then in-page position)
-        if parity_seq:
-            admitted = admitted.withColumn(
-                "__rn",
-                F.row_number().over(Window.orderBy(F.asc("parent_rank"), F.asc("pos"))),
-            )
-        else:
-            # scale path: order within a wave is not observable (any
-            # parallel crawl interleaves); __seq0 was assigned densely on
-            # new_links above, no single-partition sort
-            admitted = admitted.withColumn("__rn", F.col("__seq0")).drop("__seq0")
-        enqueue = admitted.select(
-            "url",
-            "ukey",
-            "url_hash",
-            "host",
-            (F.col("parent_depth") + 1).alias("depth"),
-            (F.col("__rn") + F.lit(seq_counter)).alias("seq"),
-            F.lit(False).alias("is_retry"),
-            F.lit(0).alias("retry_count"),
-            F.lit(0.0).alias("retry_at"),
-        )
-
-        # ---- retries (E2, O3/O4) ------------------------------------------
-        if job.retry_policy != RetryPolicy.NO:
-            timeouts = fetched.filter(F.col("status") == "timeout")
-            # keep_retry: count += 1; count >= budget ⇒ terminal (D2)
-            requeue = timeouts.filter(F.col("retry_count") + 1 < F.lit(job.retry_count)).select(
+                # scale path: order within a wave is not observable (any
+                # parallel crawl interleaves); __seq0 was assigned densely on
+                # new_links above, no single-partition sort
+                admitted = admitted.withColumn("__rn", F.col("__seq0")).drop("__seq0")
+            enqueue = admitted.select(
                 "url",
                 "ukey",
                 "url_hash",
                 "host",
-                "depth",
-                "seq",
-                F.lit(True).alias("is_retry"),
-                (F.col("retry_count") + 1).alias("retry_count"),
-                # wave clock: ripens retry_threshold waves after requeue;
-                # wall clock: the requeue stamps real time (the reference's
-                # ready_at = inserted_at + threshold, src/retry.rs:31-37)
-                (
-                    F.lit(float(iteration + 1) + job.retry_threshold)
-                    if job.retry_clock == "wave"
-                    else F.lit(float(clock()) + job.retry_threshold)
-                ).alias("retry_at"),
-            )
-        else:
-            requeue = None
-
-        # ---- commit the wave ----------------------------------------------
-        # rows staying in the frontier: the parity/top-k path computes the
-        # complement by anti-join (a limit has no filter complement); every
-        # scale-mode path expressed it as filters in `deferred` above —
-        # frontier ukeys are unique (dup ukeys never re-enter: they are in
-        # seen), so filter-complement ≡ the old frontier ∖ wave anti-join.
-        if use_anti_remaining:
-            new_frontier = frontier.join(
-                wave.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti"
-            ).unionByName(enqueue)
-        else:
-            new_frontier = enqueue
-            for part in deferred:
-                new_frontier = new_frontier.unionByName(part)
-        if requeue is not None:
-            new_frontier = new_frontier.unionByName(requeue)
-        if not use_anti_remaining and (deferred or requeue is not None):
-            # a union concatenates its inputs' partitions, and deferred
-            # parts are filters over the PREVIOUS frontier checkpoint — left
-            # unchecked the frontier's partition count grows by ~P per wave
-            # and every downstream Arrow stage pays per-task Python setup
-            # (measured: politeness fetch 2.2 s → 7 s across 17 waves).
-            # coalesce is shuffle-free and bounds it at the session
-            # parallelism; the old anti-join path got the same bound from
-            # its exchange, at shuffle price.
-            new_frontier = new_frontier.coalesce(
-                max(spark.sparkContext.defaultParallelism, 1)
+                (F.col("parent_depth") + 1).alias("depth"),
+                (F.col("__rn") + F.lit(seq_counter)).alias("seq"),
+                F.lit(False).alias("is_retry"),
+                F.lit(0).alias("retry_count"),
+                F.lit(0.0).alias("retry_at"),
             )
 
-        # seen-delta compaction: the anti-join otherwise scans one delta per
-        # past wave — O(waves²) over a long crawl and a linearly growing
-        # plan. Every K waves the union is rewritten as ONE consolidated
-        # part; earlier parts are dropped only after the state commit
-        # (crash in between ⇒ duplicate seen rows, which never change an
-        # anti-join/bloom-build result and are swept by the next compaction).
-        compact_now = (
-            job.seen_compact_every > 0
-            and (iteration + 1) % job.seen_compact_every == 0
-        )
-        if compact_now:
-            full_seen = seen.unionByName(seen_new).dropDuplicates(SEEN_COLS)
-            io.append(full_seen, "seen", iteration)
-        else:
-            # lazy in memory mode: seen_new is a pure projection of the
-            # already-checkpointed new_links frame, so re-reading it later
-            # costs a column prune over cached blocks, not a job; durable
-            # backends write regardless (resume safety)
-            io.append(seen_new, "seen", iteration, eager=False)
-        if use_bloom:
-            # the delta joins the uncovered tail now; every fold_every
-            # waves the accumulated tail is folded into the bank with ONE
-            # build+merge (never a rebuild from the full seen set) — the
-            # two applyInPandas stages amortize across waves
-            bloom_pending.append(new_links.select(*SEEN_COLS))
-            if len(bloom_pending) >= max(job.bloom_fold_every, 1):
-                tail = bloom_pending[0]
-                for f in bloom_pending[1:]:
-                    tail = tail.unionByName(f)
-                # fused fold: the tail's keys OR straight into the bank in
-                # ONE cogrouped Arrow stage (fold_bloom) instead of a
-                # build + merge pair — same bits, half the Arrow aggs
-                bloom_df = io.materialize(
-                    fold_bloom(
-                        bloom_df,
-                        tail,
-                        n_partitions=job.bloom_partitions,
-                        expected_per_partition=job.bloom_expected_per_partition,
-                        fp_rate=job.bloom_fp_rate,
-                    ),
-                    "bloom",
-                    iteration,
+            # ---- retries (E2, O3/O4) ------------------------------------------
+            if job.retry_policy != RetryPolicy.NO:
+                timeouts = fetched.filter(F.col("status") == "timeout")
+                # keep_retry: count += 1; count >= budget ⇒ terminal (D2)
+                requeue = timeouts.filter(F.col("retry_count") + 1 < F.lit(job.retry_count)).select(
+                    "url",
+                    "ukey",
+                    "url_hash",
+                    "host",
+                    "depth",
+                    "seq",
+                    F.lit(True).alias("is_retry"),
+                    (F.col("retry_count") + 1).alias("retry_count"),
+                    # wave clock: ripens retry_threshold waves after requeue;
+                    # wall clock: the requeue stamps real time (the reference's
+                    # ready_at = inserted_at + threshold, src/retry.rs:31-37)
+                    (
+                        F.lit(float(iteration + 1) + job.retry_threshold)
+                        if job.retry_clock == "wave"
+                        else F.lit(float(clock()) + job.retry_threshold)
+                    ).alias("retry_at"),
                 )
-                bloom_pending = []
-                if bloom_probe_mode != "copartition":
-                    bloom_probe_fn = bloom_probe(spark, bloom_df)
-        iteration += 1
-        # fresh/seq bookkeeping observed on the frontier materialize itself
-        obs_fr = Observation(f"frontier_{iteration}")
-        fr_metrics = [
-            F.count_if(~F.col("is_retry")).alias("fresh"),
-            F.max("seq").alias("max_seq"),
-            F.count(F.lit(1)).alias("total"),
-        ]
-        if bucketed_fetch:
-            fr_metrics.append(_bucket_metric())
-        new_frontier = new_frontier.observe(obs_fr, *fr_metrics)
-        frontier = io.materialize(new_frontier, "frontier", iteration)
-        vals = obs_fr.get
-        fresh_count = int(vals["fresh"])
-        frontier_rows = int(vals["total"])
-        if bucketed_fetch:
-            frontier_buckets = list(vals["buckets"])
-        if vals["max_seq"] is not None:
-            seq_counter = max(seq_counter, int(vals["max_seq"]))
-            if seq_counter > (1 << 62):
-                raise RuntimeError(
-                    "seq counter approaching int64 overflow "
-                    f"({seq_counter}); the sparse per-wave seq ids assume "
-                    "far fewer waves than this crawl has run"
-                )
-        io.save_state(
-            {
-                "iteration": iteration,
-                "seq_counter": seq_counter,
-                "collected": collected,
-                "fresh_count": fresh_count,
-                "frontier_rows": frontier_rows,
-                "stats": vars(stats),
-            }
-        )
-        if compact_now:
-            io.drop_appends_before("seen", iteration - 1)
-        seen = io.read_appended(spark, "seen")
+            else:
+                requeue = None
 
-    if cached_corpus is not None:
-        cached_corpus.unpersist(blocking=False)
+            # ---- commit the wave ----------------------------------------------
+            # rows staying in the frontier: the parity/top-k path computes the
+            # complement by anti-join (a limit has no filter complement); every
+            # scale-mode path expressed it as filters in `deferred` above —
+            # frontier ukeys are unique (dup ukeys never re-enter: they are in
+            # seen), so filter-complement ≡ the old frontier ∖ wave anti-join.
+            if use_anti_remaining:
+                new_frontier = frontier.join(
+                    wave.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti"
+                ).unionByName(enqueue)
+            else:
+                new_frontier = enqueue
+                for part in deferred:
+                    new_frontier = new_frontier.unionByName(part)
+            if requeue is not None:
+                new_frontier = new_frontier.unionByName(requeue)
+            if not use_anti_remaining and (deferred or requeue is not None):
+                # a union concatenates its inputs' partitions, and deferred
+                # parts are filters over the PREVIOUS frontier checkpoint — left
+                # unchecked the frontier's partition count grows by ~P per wave
+                # and every downstream Arrow stage pays per-task Python setup
+                # (measured: politeness fetch 2.2 s → 7 s across 17 waves).
+                # coalesce is shuffle-free and bounds it at the session
+                # parallelism; the old anti-join path got the same bound from
+                # its exchange, at shuffle price.
+                new_frontier = new_frontier.coalesce(
+                    max(spark.sparkContext.defaultParallelism, 1)
+                )
+
+            # seen-delta compaction: the anti-join otherwise scans one delta per
+            # past wave — O(waves²) over a long crawl and a linearly growing
+            # plan. Every K waves the union is rewritten as ONE consolidated
+            # part; earlier parts are dropped only after the state commit
+            # (crash in between ⇒ duplicate seen rows, which never change an
+            # anti-join/bloom-build result and are swept by the next compaction).
+            compact_now = (
+                job.seen_compact_every > 0
+                and (iteration + 1) % job.seen_compact_every == 0
+            )
+            if compact_now:
+                full_seen = seen.unionByName(seen_new).dropDuplicates(SEEN_COLS)
+                io.append(full_seen, "seen", iteration)
+            else:
+                # lazy in memory mode: seen_new is a pure projection of the
+                # already-checkpointed new_links frame, so re-reading it later
+                # costs a column prune over cached blocks, not a job; durable
+                # backends write regardless (resume safety)
+                io.append(seen_new, "seen", iteration, eager=False)
+            if use_bloom:
+                # the delta joins the uncovered tail now; every fold_every
+                # waves the accumulated tail is folded into the bank with ONE
+                # build+merge (never a rebuild from the full seen set) — the
+                # two applyInPandas stages amortize across waves
+                bloom_pending.append(new_links.select(*SEEN_COLS))
+                if len(bloom_pending) >= job.bloom_fold_every:
+                    tail = bloom_pending[0]
+                    for f in bloom_pending[1:]:
+                        tail = tail.unionByName(f)
+                    # fused fold: the tail's keys OR straight into the bank in
+                    # ONE cogrouped Arrow stage (fold_bloom) instead of a
+                    # build + merge pair — same bits, half the Arrow aggs
+                    bloom_df = io.materialize(
+                        fold_bloom(
+                            bloom_df,
+                            tail,
+                            n_partitions=job.bloom_partitions,
+                            expected_per_partition=job.bloom_expected_per_partition,
+                            fp_rate=job.bloom_fp_rate,
+                        ),
+                        "bloom",
+                        iteration,
+                    )
+                    bloom_pending = []
+                    if bloom_probe_mode != "copartition":
+                        bloom_probe_fn = bloom_probe(spark, bloom_df)
+            iteration += 1
+            # fresh/seq bookkeeping observed on the frontier materialize itself
+            obs_fr = Observation(f"frontier_{iteration}")
+            fr_metrics = [
+                F.count_if(~F.col("is_retry")).alias("fresh"),
+                F.max("seq").alias("max_seq"),
+                F.count(F.lit(1)).alias("total"),
+            ]
+            if bucketed_fetch:
+                fr_metrics.append(_bucket_metric())
+            new_frontier = new_frontier.observe(obs_fr, *fr_metrics)
+            frontier = io.materialize(new_frontier, "frontier", iteration)
+            vals = obs_fr.get
+            fresh_count = int(vals["fresh"])
+            frontier_rows = int(vals["total"])
+            if bucketed_fetch:
+                frontier_buckets = list(vals["buckets"])
+            if vals["max_seq"] is not None:
+                seq_counter = max(seq_counter, int(vals["max_seq"]))
+                if seq_counter > (1 << 62):
+                    raise RuntimeError(
+                        "seq counter approaching int64 overflow "
+                        f"({seq_counter}); the sparse per-wave seq ids assume "
+                        "far fewer waves than this crawl has run"
+                    )
+            io.save_state(
+                {
+                    "iteration": iteration,
+                    "seq_counter": seq_counter,
+                    "collected": collected,
+                    "fresh_count": fresh_count,
+                    "frontier_rows": frontier_rows,
+                    "stats": vars(stats),
+                }
+            )
+            if compact_now:
+                io.drop_appends_before("seen", iteration - 1)
+            seen = io.read_appended(spark, "seen")
+    finally:
+        # a wave that raises must not leak the corpus cache
+        if cached_corpus is not None:
+            cached_corpus.unpersist(blocking=False)
     results = io.read_appended(spark, "results")
     metrics = io.read_appended(spark, "metrics")
     return CrawlResult(

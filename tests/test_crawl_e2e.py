@@ -619,3 +619,36 @@ def test_broadcast_wave_crawl_identical(spark):
     )
     assert vars(base.stats) == vars(bcast.stats)
     assert bcast.stats.count_errors == 1  # the miss was counted via observe
+
+
+def test_failed_wave_unpersists_corpus_cache(spark, monkeypatch):
+    """The fetch-corpus cache is released even when a wave raises: the
+    state store fails after the first fetch has filled the cache, and the
+    persisted frame must be back to StorageLevel.NONE afterwards."""
+    from doonop_spark.sources.tables import MemoryTableIO
+
+    persisted = []
+    frame_cls = type(spark.range(1))
+    orig_persist = frame_cls.persist
+
+    def persist(self, *args, **kwargs):
+        out = orig_persist(self, *args, **kwargs)
+        persisted.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "persist", persist)
+
+    class FailingIO(MemoryTableIO):
+        def materialize(self, df, name, iteration):
+            if name == "new_links":
+                raise RuntimeError("wave died")
+            return super().materialize(df, name, iteration)
+
+    corpus = synthetic_corpus(spark, n_hosts=2, n_pages=20)
+    job = CrawlJob(seeds=["http://h0000.example/p0"], engines=None)
+    with pytest.raises(RuntimeError, match="wave died"):
+        run_crawl(spark, job, corpus, io=FailingIO())
+    assert persisted, "the crawl did not cache its corpus"
+    for frame in persisted:
+        level = frame.storageLevel
+        assert not (level.useMemory or level.useDisk), level

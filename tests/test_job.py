@@ -161,3 +161,25 @@ def test_job_from_argv_defaults_match_reference():
     assert job.browser == "firefox"
     assert not job.use_robots
     assert job.robot == "DoonopRobot"
+
+
+@pytest.mark.parametrize(
+    "knob, value",
+    [
+        ("retry_clock", "walltime"),
+        ("politeness_impl", "windows"),
+        ("bloom_probe_mode", "bcast"),
+        ("url_key", "SURT"),
+        ("check", "js"),
+        ("per_host_budget", 0),
+        ("bloom_fold_every", 0),
+        ("seen_compact_every", -1),
+        ("wave_seconds", 0.0),
+    ],
+)
+def test_crawl_job_rejects_bad_knob(knob, value):
+    """A bad config fails when the CrawlJob is built, naming the knob —
+    never as a silent fallback (an unknown retry_clock used to run as
+    wall clock, an unknown politeness_impl as 'window')."""
+    with pytest.raises(ValueError, match=knob):
+        CrawlJob(seeds=["http://a.example/"], **{knob: value})

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
 from doonop_spark.operators.robots import (
     DEFAULT_ROBOT,
     crawl_delay_of,
@@ -113,3 +116,83 @@ def test_ua_matching_groups_merge():
     assert not is_allowed(txt, "/two/x", "A")
     assert is_allowed(txt, "/b/x", "A")
     assert crawl_delay_of(txt, "A") == 3
+
+
+# rule and path pieces: regex metacharacters, the '*'/'$' wildcards and a
+# literal \E — drawn from one small vocabulary so rules and paths overlap
+_PIECES = ["/", "a", "b", ".", "+", "?", "(", ")", "[", "]", "{", "}", "|",
+           "^", "\\", "E", "\\E", "*", "$"]
+_AGENTS = ["DoonopRobot", "OtherBot", "*", "doonop"]
+
+
+def _joined(pieces):
+    return st.lists(st.sampled_from(pieces), max_size=5).map("".join)
+
+
+_rule = st.tuples(
+    st.sampled_from(["Allow", "Disallow"]),
+    _joined(_PIECES),  # "" = empty Disallow
+)
+_group = st.tuples(
+    st.lists(st.sampled_from(_AGENTS), min_size=1, max_size=2),
+    st.lists(_rule, max_size=4),
+)
+
+
+def _robots_txt(groups):
+    return "\n\n".join(
+        "".join(f"User-agent: {a}\n" for a in agents)
+        + "".join(f"{d}: {p}\n" for d, p in rules)
+        for agents, rules in groups
+    )
+
+
+_host_robots = st.one_of(
+    st.none(),  # a robots row whose fetch failed (NULL robots_txt)
+    st.lists(_group, min_size=1, max_size=3).map(_robots_txt),
+)
+_url = st.tuples(
+    st.integers(0, 6),  # host index; indexes past the table have no row
+    _joined([p for p in _PIECES if p != "?"]),  # '?' would end the path
+    st.one_of(st.none(), _joined(["a", "=", "&", "/", "*", "$"])),  # query
+)
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(
+    st.lists(_host_robots, min_size=1, max_size=5),
+    st.lists(_url, min_size=1, max_size=40),
+)
+@example(
+    ["User-agent: *\nDisallow: /a\\Eb\nDisallow: /*.x$\nAllow: /(a\n"],
+    [(0, "a\\Eb", None), (0, "a\\Ec", None), (0, "q.x", None),
+     (0, "q.x", "y"), (0, "q.xy", None), (0, "(ab", None), (0, "", None)],
+)
+def test_jvm_gate_matches_is_allowed(spark, host_robots, urls):
+    """The JVM gate keeps exactly the rows ``is_allowed`` admits, for a
+    robot with its own groups and one that falls back to '*': each
+    generated host carries robots.txt or a NULL fetch miss, host indexes
+    past the table have no robots row at all, and a hostless URL always
+    passes (F7). The query never takes part in matching."""
+    robots = spark.createDataFrame(
+        [(f"h{i}.example", t) for i, t in enumerate(host_robots)],
+        "host string, robots_txt string",
+    )
+    rows = [("javascript:void(0)", None, None, None)]
+    for i, path, query in urls:
+        url = f"http://h{i}.example/{path}" + ("" if query is None else "?" + query)
+        rows.append((url, f"h{i}.example", i, "/" + path))
+    wave = spark.createDataFrame(
+        rows, "url string, host string, i int, path string"
+    )
+    for robot in ("DoonopRobot", "ZetaBot"):
+        want = sorted(
+            url
+            for url, host, i, path in rows
+            if host is None
+            or (i < len(host_robots) and is_allowed(host_robots[i], path, robot))
+        )
+        got = sorted(
+            r.url for r in robots_gate(wave, robots, robot, use_robots=True).collect()
+        )
+        assert got == want, robot
